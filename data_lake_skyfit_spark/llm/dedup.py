@@ -636,11 +636,13 @@ def connected_components(
     # The fused init below uses null-skipping F.least, which would hand a
     # NULL endpoint label=min(t) instead of keeping it NULL (the r4c
     # least-vs-NULL trap). Pair inputs here are non-null by contract;
-    # enforce it so a future nullable caller diverges loudly, not
-    # silently (ADVICE r9).
+    # a NULL endpoint fails the first job that reads the edges (no extra
+    # job), so a nullable caller diverges loudly, not silently.
+    null_endpoint = F.raise_error(F.lit("connected_components: NULL pair endpoint"))
     edges = pairs.select(
-        F.col(a_col).alias("s"), F.col(b_col).alias("t")
-    ).filter(F.col("s").isNotNull() & F.col("t").isNotNull())
+        F.coalesce(F.col(a_col), null_endpoint).alias("s"),
+        F.coalesce(F.col(b_col), null_endpoint).alias("t"),
+    )
     sym = edges.unionByName(
         edges.select(F.col("t").alias("s"), F.col("s").alias("t"))
     ).localCheckpoint(eager=False)

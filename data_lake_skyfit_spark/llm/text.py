@@ -268,9 +268,10 @@ def language_scores_trigram(
     # The raw f-string interpolation below is only safe while profile
     # grams stay inside [a-z ] — a quote or backslash in a future
     # profile entry would break (or silently change) the parsed SQL.
-    assert all(c.islower() or c == " " for g in grams for c in g), (
-        "TRIGRAM_PROFILES grams must be [a-z ] — escape before widening"
-    )
+    if not all(c in "abcdefghijklmnopqrstuvwxyz " for g in grams for c in g):
+        raise ValueError(
+            "TRIGRAM_PROFILES grams must be [a-z ] — escape before widening"
+        )
     counts = staged.select(
         F.col(id_col),
         *[

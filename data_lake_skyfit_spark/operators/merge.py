@@ -10,10 +10,12 @@ tables (normalize_zendesk.py:723), and TRUNCATE+INSERT full refresh
 
 Spark-first realization. With Delta/Iceberg on the classpath this is
 literally `MERGE INTO`; this image has neither, so the same semantics
-are built from joins + a partition-aware rewrite:
+are built from one keyed window + a partition-aware rewrite:
 
-- join target⟷source on the key, build the merged row set
-  (update-all / update-subset / insert-only), write back;
+- union target and source rows, tagged by side, and pick each key's
+  rows in ONE window partitioned by the key (merge_window: one shuffle
+  does the source's latest-wins dedupe and the update-all /
+  update-subset / insert-only upsert), write back;
 - for partitioned tables only the partitions containing source keys are
   rewritten (dynamic partition overwrite) — the 100 TB path: merging a
   day of entries rewrites one year partition's touched files, not the
@@ -34,12 +36,10 @@ import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .dedupe import latest_wins
-
-__all__ = ["ParquetTable", "MergeMode", "align_schemas", "merge_rows", "leaf_dirs"]
+__all__ = ["ParquetTable", "MergeMode", "align_schemas", "merge_window", "leaf_dirs"]
 
 
 class MergeMode:
@@ -87,42 +87,53 @@ def align_schemas(target: DataFrame, source: DataFrame) -> tuple[DataFrame, Data
     return target.select(*cols), source.select(*cols)
 
 
-def merge_rows(
-    target: DataFrame,
+def merge_window(
+    target: DataFrame | None,
     source: DataFrame,
     keys: Sequence[str],
     mode: str = MergeMode.UPDATE_ALL,
     update_subset: Sequence[str] = (),
+    source_order: Sequence[str | Column] = (),
 ) -> DataFrame:
-    """The MERGE row set: target ⟷ source matched on null-safe key
-    equality, combined per `mode` (see ParquetTable.merge). Pure frame
-    construction — callers own deduplication, schema alignment, and
-    writing. Both frames must already share one schema."""
-    keys = list(keys)
-    cols = target.columns
-    t, s = target.alias("t"), source.alias("s")
-    match = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    on = match[0]
-    for m in match[1:]:
-        on = on & m
-
-    unmatched_target = t.join(s, on, "left_anti")
-    inserts = s.join(t, on, "left_anti")
-
-    if mode == MergeMode.DO_NOTHING:
-        matched = t.join(s, on, "left_semi")
-    elif mode == MergeMode.UPDATE_SUBSET:
-        subset = set(update_subset)
-        matched = t.join(s, on, "inner").select(
-            *[
-                (F.col(f"s.{c}") if c in subset else F.col(f"t.{c}")).alias(c)
-                for c in cols
-            ]
-        )
-    else:  # UPDATE_ALL
-        matched = s.join(t, on, "left_semi")
-
-    return unmatched_target.unionByName(matched).unionByName(inserts)
+    """The MERGE row set in one shuffle: target and source rows, tagged
+    by side, meet in one window partitioned by the keys (it groups NULL
+    keys together, like eqNullSafe). Source rows sort first, by
+    `source_order` desc, so a key's row 1 is its best source row if it
+    has one. update_all keeps that row, or the key's target rows when
+    no source row has the key; do_nothing keeps every target row plus
+    the best source row of keys no target row has; update_subset is
+    do_nothing with matched target rows taking `update_subset` columns
+    from the best source row. `target=None` (first write, pure insert)
+    leaves the source's latest-wins dedupe. One schema for both frames."""
+    side = F.col("__side")
+    rows = source.withColumn("__side", F.lit(1))
+    if target is not None:
+        rows = target.withColumn("__side", F.lit(0)).unionByName(rows)
+    order = [F.col(c) if isinstance(c, str) else c for c in source_order]
+    w = Window.partitionBy(*keys).orderBy(side.desc(), *[c.desc() for c in order])
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    subset = [c for c in source.columns if c in set(update_subset)]
+    if mode != MergeMode.UPDATE_SUBSET:
+        subset = []
+    rows = rows.select(
+        "*",
+        ((F.row_number().over(w) == 1) & (side == 1)).alias("__best"),
+        (F.max(side).over(whole) == 1).alias("__has_src"),
+        (F.min(side).over(whole) == 0).alias("__has_tgt"),
+        *[F.first(c).over(whole).alias(f"__src_{c}") for c in subset],
+    )
+    if mode == MergeMode.UPDATE_ALL:
+        rows = rows.filter("__best OR NOT __has_src")
+    else:
+        rows = rows.filter("__side = 0 OR (__best AND NOT __has_tgt)")
+    return rows.select(
+        *[
+            F.when(F.col("__has_src"), F.col(f"__src_{c}")).otherwise(F.col(c)).alias(c)
+            if c in subset
+            else F.col(c)
+            for c in (source if target is None else target).columns
+        ]
+    )
 
 
 def partition_scope(
@@ -179,7 +190,7 @@ def partition_scope(
 #: deliberately EXCLUDED (code-review r3): a double key can be NaN,
 #: which footer min/max never cover and range predicates never match,
 #: so a NaN-key update would be misclassified as a pure insert while
-#: merge_rows' eqNullSafe would have matched it — a duplicate-key
+#: merge_window's key partitioning would have matched it — a duplicate-key
 #: corruption. Float merge keys take the full-rewrite path.
 _PRUNABLE_STAT_TYPES = (bool, int, str)
 
@@ -583,14 +594,13 @@ class ParquetTable:
         analog of the reference's last-write-wins loop ordering.
         """
         keys = list(self.key)
-        if source_order:
-            source = latest_wins(source, keys, list(source_order))
-        else:
-            source = source.dropDuplicates(keys)
+
+        def rows(target: DataFrame | None, src: DataFrame) -> DataFrame:
+            return merge_window(target, src, keys, mode, update_subset, source_order)
 
         spark = source.sparkSession
         if not self.exists():
-            self._write(source, self.path)
+            self._write(rows(None, source), self.path)
             return
 
         # Unpartitioned tables: file-level pruned rewrite. Only files
@@ -612,13 +622,13 @@ class ParquetTable:
                         # matching key — append without reading the table.
                         tmp = f"{self.path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
                         _, src = align_schemas(self.read(spark).limit(0), source)
-                        self._write(src, tmp)
+                        self._write(rows(None, src), tmp)
                         self._commit_file_pruned(tmp, untouched)
                         return
                     if untouched:
                         tsub = spark.read.parquet(*touched)
                         tsub, src = align_schemas(tsub, source)
-                        merged = merge_rows(tsub, src, keys, mode, update_subset)
+                        merged = rows(tsub, src)
                         tmp = f"{self.path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
                         self._write(merged, tmp)
                         self._commit_file_pruned(tmp, untouched)
@@ -638,5 +648,4 @@ class ParquetTable:
             if partition_scoped:
                 target = target.filter(cond)
 
-        merged = merge_rows(target, source, keys, mode, update_subset)
-        self._swap_write(merged, partition_scoped=partition_scoped)
+        self._swap_write(rows(target, source), partition_scoped=partition_scoped)

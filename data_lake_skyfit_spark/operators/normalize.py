@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from ..sources import bronze
 from ..specs.base import ChildSpec, EntitySpec
-from .dedupe import latest_wins
 from .merge import ParquetTable
 
 __all__ = ["Lakehouse"]
@@ -120,16 +119,12 @@ class Lakehouse:
     # -- STG → CORE ---------------------------------------------------------
 
     def _deduped_stg(self, spec: EntitySpec) -> DataFrame:
-        stg = self.stg_table(spec).read(self.spark)
-        keys = list(spec.stg_key) + (["scope"] if spec.scoped else [])
-        order_col = (
-            F.col(f"raw.{spec.dedupe_order}")
-            if spec.dedupe_order not in stg.columns
-            else F.col(spec.dedupe_order)
-        )
-        # W1: keep-newest before every CORE normalize
-        # (normalize_pipedrive.py:122-133).
-        return latest_wins(stg, keys, [order_col], tie_breakers=[F.col("_source_file")])
+        # The reference re-runs W1 keep-newest before every CORE
+        # normalize (normalize_pipedrive.py:122-133). Here STG is written
+        # only by load_stg's latest-wins MERGE keyed on stg_key (+ scope),
+        # so it already holds one row per key: a second window over it
+        # would be a no-op shuffle.
+        return self.stg_table(spec).read(self.spark)
 
     def normalize_core(self, spec: EntitySpec, *, full_refresh: bool = False) -> None:
         """Typed CORE projection + children (the transformer stage)."""

@@ -43,21 +43,20 @@ import json
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedupe import latest_wins
 from .merge import (
     MergeMode,
     align_schemas,
     clustered_rewrite,
     file_key_ranges,
     leaf_dirs,
-    merge_rows,
+    merge_window,
     partition_scope,
     touched_by_key_ranges,
 )
@@ -504,7 +503,7 @@ class VersionedParquetTable:
         a crash between sink commit and checkpoint advance redelivers a
         batch.
 
-        Same row semantics as ParquetTable.merge (shared merge_rows /
+        Same row semantics as ParquetTable.merge (shared merge_window /
         partition_scope helpers); the difference is the commit: touched
         partitions are written copy-on-write into a new generation and
         the manifest splices them over the parent mapping, so untouched
@@ -512,14 +511,13 @@ class VersionedParquetTable:
         readable.
         """
         keys = list(self.key)
-        if source_order:
-            source = latest_wins(source, keys, list(source_order))
-        else:
-            source = source.dropDuplicates(keys)
+
+        def rows(target: DataFrame | None, src: DataFrame) -> DataFrame:
+            return merge_window(target, src, keys, mode, update_subset, source_order)
 
         spark = source.sparkSession
         if not self.exists():
-            gen, parts = self._write_generation(source)
+            gen, parts = self._write_generation(rows(None, source))
             files = (
                 self._collect_file_entries(gen) if not self.partition_by else None
             )
@@ -539,7 +537,7 @@ class VersionedParquetTable:
 
         if not self.partition_by:
             return self._merge_unpartitioned(
-                spark, parent_manifest, source, keys, mode, update_subset, txn
+                spark, parent_manifest, source, keys, rows, txn
             )
 
         parent = parent_manifest["partitions"]
@@ -552,7 +550,7 @@ class VersionedParquetTable:
             if scoped:
                 target = target.filter(cond)
 
-        merged = merge_rows(target, source, keys, mode, update_subset)
+        merged = rows(target, source)
         gen, parts = self._write_generation(merged)
         if scoped:
             mapping = dict(parent)
@@ -567,8 +565,7 @@ class VersionedParquetTable:
         parent_manifest: dict,
         source: DataFrame,
         keys: list[str],
-        mode: str,
-        update_subset: Sequence[str],
+        rows: Callable[[DataFrame | None, DataFrame], DataFrame],
         txn: tuple[str, int] | None = None,
     ) -> int:
         """File-level copy-on-write MERGE: the parent manifest's per-file
@@ -579,13 +576,13 @@ class VersionedParquetTable:
         the commit cost is ∝ touched data + kilobytes of manifest. The
         parent version stays readable (time travel) because carried
         entries keep pointing at their original generations — the same
-        economics as the partition-scoped path, at file granularity."""
+        economics as the partition-scoped path, at file granularity.
+        `rows(target, source)` is merge's merge_window for this batch."""
         entries = self._unpartitioned_entries(parent_manifest)
         target_all = self.read(spark)
 
         def full_rewrite() -> int:
-            target, src = align_schemas(target_all, source)
-            merged = merge_rows(target, src, keys, mode, update_subset)
+            merged = rows(*align_schemas(target_all, source))
             gen, _parts = self._write_generation(merged)
             return self._commit(
                 {}, "merge", merged.schema.json(),
@@ -638,11 +635,10 @@ class VersionedParquetTable:
 
         if touched:
             tsub = spark.read.parquet(*[self._entry_path(e) for e in touched])
-            tsub, src = align_schemas(tsub, source)
-            merged = merge_rows(tsub, src, keys, mode, update_subset)
+            merged = rows(*align_schemas(tsub, source))
         else:
             # Pure-insert batch: no existing file can hold a match.
-            _t0, merged = align_schemas(target_all.limit(0), source)
+            merged = rows(None, align_schemas(target_all.limit(0), source)[1])
         gen, _parts = self._write_generation(merged)
         return self._commit(
             {}, "merge", merged.schema.json(),

@@ -10,10 +10,13 @@ from data_lake_skyfit_spark.tables import load_table
 
 
 def test_compact_reduces_file_count(spark, tmp_path):
-    t = ParquetTable(str(tmp_path / "t"), ["id"])
+    # Incremental merges into a range-clustered table take the file-pruned
+    # path (forced here; the default floor is 64 MB): untouched files are
+    # carried and each merge adds its own → many small files. (A small
+    # table's full-rewrite merge writes one coalesced shuffle output.)
+    t = ParquetTable(str(tmp_path / "t"), ["id"], prune_min_bytes=0)
     base = spark.range(2000).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    # many incremental merges → many small files
-    t.overwrite(base.repartition(16))
+    t.overwrite(base.repartitionByRange(16, "id"))
     for i in range(3):
         t.merge(
             spark.range(i * 10, i * 10 + 10)

@@ -93,6 +93,27 @@ def test_connected_components_raises_when_unconverged(spark):
     assert {r["cluster_id"] for r in labels} == {0}
 
 
+def test_connected_components_raises_on_null_endpoint(spark):
+    """A NULL pair endpoint must fail the job, never be dropped: the
+    null-skipping label init would otherwise merge it into a cluster."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (3, 4)], "a_id long, b_id long"
+    )
+    with pytest.raises(Exception, match="NULL pair endpoint"):
+        connected_components(pairs).collect()
+
+
+def test_trigram_profiles_reject_sql_unsafe_grams(spark, monkeypatch):
+    """Profile grams are spliced into SQL literals: a quote must raise
+    ValueError, not change the parsed expression."""
+    from data_lake_skyfit_spark.llm import text
+
+    monkeypatch.setitem(text.TRIGRAM_PROFILES, "xx", ("a'b",))
+    df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=r"\[a-z \]"):
+        text.language_scores_trigram(df)
+
+
 def test_partition_merge_null_and_special_values(spark, tmp_path):
     """MERGE on a table partitioned by a column containing NULLs and
     path-hostile strings: no rows may be lost or duplicated (round-1

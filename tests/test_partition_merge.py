@@ -329,7 +329,7 @@ def test_pruned_commit_dir_survives_concurrent_vacuum(spark, tmp_path, monkeypat
 
 def test_float_keys_never_prune(spark, tmp_path):
     """code-review r3: NaN keys are invisible to footer ranges but
-    matched by merge_rows' eqNullSafe, so float merge keys must take
+    matched by merge_window's key window, so float merge keys must take
     the full-rewrite path — pinned via NaN update correctness."""
     root = str(tmp_path / "fkey")
     t = ParquetTable(root, ["score"], prune_min_bytes=0)

@@ -188,6 +188,34 @@ def test_file_pruned_merge_probe_broadcasts_ranges(spark, tmp_path):
     assert "CartesianProduct" not in plan
 
 
+def test_update_all_merge_is_one_keyed_shuffle(spark, tmp_path, monkeypatch):
+    """MERGE into an existing unpartitioned table: the row set (source
+    latest-wins dedupe + upsert) is ONE window over target ∪ source, so
+    its executed plan holds exactly one shuffle, hash-partitioned on the
+    merge key, and reads the source once — never a dedupe shuffle plus
+    joins that re-evaluate the source."""
+    from data_lake_skyfit_spark.operators.merge import ParquetTable
+
+    t = ParquetTable(str(tmp_path / "tgt"), ["id"])
+    t.overwrite(spark.range(1000).select("id", F.lit(0).alias("v")))
+    src_path = str(tmp_path / "src")
+    spark.range(500, 1500).select("id", (F.col("id") % 7).alias("v")).write.parquet(
+        src_path
+    )
+    written = []
+    monkeypatch.setattr(
+        ParquetTable, "_swap_write", lambda self, df, **kw: written.append(df)
+    )
+    t.merge(spark.read.parquet(src_path), source_order=["v"])
+    (rows,) = written
+    assert rows.count() == 1500
+    plan = _physical(rows)
+    shuffles = [ln for ln in plan.splitlines() if "Exchange " in ln]
+    assert len(shuffles) == 1 and "hashpartitioning(id#" in shuffles[0], plan
+    # one scan of the target, one of the source
+    assert plan.count("FileScan parquet") == 2, plan
+
+
 def test_trigram_language_id_is_shuffle_free_map(spark, sf_dir, qreg):
     """The trigram scorer must stay a pure codegen scalar map: per-doc
     replace-counts, cosine and argmax all compute in one scan pipeline

@@ -100,6 +100,9 @@ def test_salted_join_zipf_stress_splits_straggler(spark):
     confs = {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
+        # The session defaults shuffle partitions to the core count; at
+        # 4 cores no partition could hold under 1/4 of the rows.
+        "spark.sql.shuffle.partitions": "32",
     }
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
